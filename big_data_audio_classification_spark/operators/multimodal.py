@@ -578,7 +578,8 @@ def mm_wav_resample_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     wavs = d.mapInPandas(resample, schema="media_id long, wav binary")
     path = os.path.join(_SCRATCH, "mm_wav_resample_sink")
     wavs.write.mode("overwrite").parquet(path)
-    back = spark.read.parquet(path)
+    # read back with the schema just written: no footer-inference job
+    back = spark.read.schema(wavs.schema).parquet(path)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

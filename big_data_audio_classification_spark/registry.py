@@ -114,6 +114,10 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 # (d) 34 first-time fills from the 218-query never-certified backlog
 # under the standing greedy family-tag cover (tests/test_registry.py).
 # Every entry passed the tri-SF bit-exact local gate before rotation.
+# Amendment (schema-memo change): mm_wav_resample_sink re-enters as a
+# RECERTIFY entry (its sink read-back now passes the written schema
+# instead of inferring it); it takes the slot of the first-time fill
+# mm_metadata_stats, whose one family tag (multimodal) it also carries.
 DRIVER_WINDOW: tuple[str, ...] = (
     "dedup_minhash_jaccard_estimate",
     "ml_conformal_interval",
@@ -123,6 +127,7 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "stats_hodges_lehmann",
     "graph_pagerank_knn",
     "graph_pagerank_oracle",
+    "mm_wav_resample_sink",
     "ml_quantile_binning",
     "events_session_duration_deciles",
     "skew_key_gini_imbalance",
@@ -153,7 +158,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "ref_filter_scalar_max",
     "join_range_point_in_interval",
     "audio_phase_energy_ratio",
-    "mm_metadata_stats",
     "mm_payload_shannon_entropy",
     "events_tumbling_window_fn",
     "agg_pandas_udaf_midhinge",
@@ -198,6 +202,10 @@ RECERTIFY: tuple[str, ...] = (
     "stats_hodges_lehmann",
     "graph_pagerank_knn",
     "graph_pagerank_oracle",
+    # The parquet sink read-back reads with the schema it just wrote
+    # instead of inferring it from the footer (one Spark job fewer per
+    # run); same rows, same schema.
+    "mm_wav_resample_sink",
 )
 
 

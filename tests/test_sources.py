@@ -1,11 +1,150 @@
-"""Round-trip tests for the non-parquet source/sink surface."""
+"""Tests for the source/sink surface: the parquet catalog's schema memo
+and round trips through the non-parquet sources and sinks."""
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+import uuid
+from concurrent.futures import ThreadPoolExecutor
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from big_data_audio_classification_spark.sources import readers
-from big_data_audio_classification_spark.sources.catalog import load_table
+from big_data_audio_classification_spark.sources.catalog import (
+    TABLES,
+    load_table,
+    normalize_events_ts,
+)
+
+# The olap benchmark workload's queries (perfbench/workloads.py).
+OLAP_QUERIES = (
+    "pricing_summary",
+    "join_inner_revenue_by_nation",
+    "agg_count_distinct",
+    "window_lag_lead_events",
+    "tpch_q3_shipping_priority",
+)
+
+
+def _jobs_by_group(spark, run):
+    """Call ``run(in_group)``, where ``in_group(g)`` puts the Spark jobs
+    that follow in job group ``g``, and return {group: job ids}. A
+    sentinel job closes the run: once the status tracker lists it, it
+    lists every earlier job too (the listener bus delivers in order).
+    Group ids are unique per call, so no earlier call's jobs are seen."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    prefix = f"{uuid.uuid4().hex}/"
+    groups = []
+
+    def in_group(group):
+        groups.append(group)
+        sc.setJobGroup(prefix + group, group)
+
+    try:
+        run(in_group)
+        in_group("sentinel")
+        spark.range(1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(prefix + "sentinel"):
+        assert time.time() < deadline, "sentinel job never reached the status tracker"
+        time.sleep(0.05)
+    return {g: list(tracker.getJobIdsForGroup(prefix + g)) for g in groups}
+
+
+def test_memoized_load_matches_plain_read(spark, sf_dir):
+    """Once a table's schema is memoized, load_table returns exactly what
+    a plain inferring read returns: same schema, same rows."""
+    for name in TABLES:
+        load_table(spark, sf_dir, name)
+        memo = load_table(spark, sf_dir, name)
+        plain = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events":
+            plain = normalize_events_ts(plain)
+        assert memo.schema == plain.schema, name
+        assert sorted(map(repr, memo.collect())) == sorted(
+            map(repr, plain.collect())
+        ), name
+
+
+def test_memoized_load_launches_no_job(spark, sf_dir, tmp_path):
+    """The first load of a file infers its schema with a Spark job; every
+    later load of the same file launches none."""
+    shutil.copyfile(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
+
+    def run(in_group):
+        in_group("infer")
+        load_table(spark, str(tmp_path), "events")
+        for name in TABLES:
+            load_table(spark, sf_dir, name)
+        in_group("memo")
+        load_table(spark, str(tmp_path), "events")
+        for name in TABLES:
+            load_table(spark, sf_dir, name)
+
+    jobs = _jobs_by_group(spark, run)
+    assert jobs["infer"], "a first load infers its schema with a Spark job"
+    assert jobs["memo"] == []
+
+
+def test_rewritten_table_is_inferred_again(spark, sf_dir, tmp_path):
+    """A rewritten file changes its identity, so the next load infers its
+    new schema instead of reusing the memoized one."""
+    path = tmp_path / "nation.parquet"
+    shutil.copyfile(f"{sf_dir}/nation.parquet", path)
+    before = load_table(spark, str(tmp_path), "nation")
+    assert load_table(spark, str(tmp_path), "nation").columns == before.columns
+    t = pq.read_table(path)
+    pq.write_table(t.append_column("n_extra", pa.array(range(t.num_rows))), path)
+    after = load_table(spark, str(tmp_path), "nation")
+    assert after.columns == before.columns + ["n_extra"]
+    assert sorted(r.n_extra for r in after.collect()) == list(range(t.num_rows))
+
+
+def test_concurrent_first_loads_agree(spark, sf_dir, tmp_path):
+    """Threads racing on the first loads of the same files all get the
+    inferred schema, and the memo keeps one entry per file."""
+    from big_data_audio_classification_spark.sources import catalog
+
+    for name in TABLES:
+        shutil.copyfile(f"{sf_dir}/{name}.parquet", tmp_path / f"{name}.parquet")
+    want = {n: load_table(spark, sf_dir, n).schema for n in TABLES}
+
+    def load_all(_):
+        return {n: load_table(spark, str(tmp_path), n).schema for n in TABLES}
+
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        got = list(pool.map(load_all, range(16), timeout=300))
+    assert all(g == want for g in got)
+    root = os.path.realpath(tmp_path) + os.sep
+    assert sum(p.startswith(root) for p in catalog._SCHEMAS) == len(TABLES)
+
+
+def test_olap_query_rebuild_launches_no_job(spark, sf_dir):
+    """Building a benchmark query's DataFrame a second time launches no
+    Spark job: no schema inference, no eager action inside the fn."""
+    from big_data_audio_classification_spark.registry import all_queries
+
+    qs = all_queries()
+
+    def run(in_group):
+        in_group("first")
+        for name in OLAP_QUERIES:
+            qs[name].fn(spark, sf_dir)
+        for name in OLAP_QUERIES:
+            in_group(f"again/{name}")
+            qs[name].fn(spark, sf_dir)
+
+    jobs = _jobs_by_group(spark, run)
+    assert {n: jobs[f"again/{n}"] for n in OLAP_QUERIES} == {
+        n: [] for n in OLAP_QUERIES
+    }
 
 
 def test_csv_roundtrip_with_header(spark, sf_dir, tmp_path):
